@@ -109,14 +109,18 @@ def percentile(values: list[float], pct: float) -> float:
     return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
 
 
-def summary(values: list[float], tail_pct: float) -> dict:
-    """Median, the ``tail_pct`` percentile, and how many samples lie
-    beyond it (the tail is only quoted with at least ten beyond it;
-    below that the maximum is reported and labelled as such)."""
+TAIL_PCTS = (99.0, 95.0, 90.0, 80.0)
+
+
+def summary(values: list[float]) -> dict:
+    """Median and tail of independent samples.  The tail is the highest
+    of TAIL_PCTS with at least ten samples beyond it; with fewer than
+    fifty samples it is the maximum, labelled as such."""
     n = len(values)
-    beyond = int(n * (100.0 - tail_pct) / 100.0)
-    if beyond >= 10:
-        tail, label = percentile(values, tail_pct), f"p{tail_pct:g}"
+    for pct in TAIL_PCTS:
+        if n * (100.0 - pct) / 100.0 >= 10:
+            tail, label = percentile(values, pct), f"p{pct:g}"
+            break
     else:
         tail, label = max(values), "max"
     return {
@@ -127,27 +131,40 @@ def summary(values: list[float], tail_pct: float) -> dict:
     }
 
 
-def event_latencies(
+def file_latencies(
     commit_time: dict[int, float],
     batch_files: dict[int, list[str]],
-    file_due: dict[str, tuple[float, int]],
-) -> list[tuple[str, float]]:
-    """Per-event latency from a checkpoint's commit log.
+    file_due: dict[str, float],
+) -> dict[str, float]:
+    """Latency of each input file's events, from a checkpoint's commit
+    log.
 
     ``commit_time`` maps batch id -> when its ``commits/`` entry
-    landed; ``batch_files`` maps batch id -> the input files the
-    batch read; ``file_due`` maps file name -> (due time of its events,
-    number of events in it that reach the sink).  Every event of a file
-    gets latency ``commit - due``.  Returns (file, latency) pairs, one
-    per event; files of uncommitted batches are skipped."""
-    out: list[tuple[str, float]] = []
-    for batch, files in sorted(batch_files.items()):
-        if batch not in commit_time:
-            continue
-        for f in files:
-            due, n = file_due[f]
-            out.extend([(f, commit_time[batch] - due)] * n)
-    return out
+    landed; ``batch_files`` maps batch id -> the input files the batch
+    read; ``file_due`` maps file name -> the due time of its events.
+    Every event of a file has latency ``commit - due``, so a file is one
+    sample.  Files of uncommitted batches, and files not in
+    ``file_due``, are skipped."""
+    return {
+        f: commit_time[batch] - file_due[f]
+        for batch, files in batch_files.items()
+        if batch in commit_time
+        for f in files
+        if f in file_due
+    }
+
+
+class Checks:
+    """Output checks of one run: how many ran, and the failures."""
+
+    def __init__(self):
+        self.run = 0
+        self.errors: list[str] = []
+
+    def expect(self, ok: bool, failure: str) -> None:
+        self.run += 1
+        if not ok:
+            self.errors.append(failure)
 
 
 # ------------------------------------------------------ spark counters

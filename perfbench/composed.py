@@ -26,7 +26,7 @@ import statistics
 import time
 from contextlib import nullcontext
 
-from common import listing, next_job_id
+from common import Checks, listing, next_job_id
 from gen import EventMaker, write_file
 
 BACKLOG_EVENTS = 300
@@ -265,11 +265,12 @@ def run(spark, work: str, seed: int, seconds: float, tracer=None) -> dict:
         os.makedirs(p, exist_ok=True)
     cfg = settings(root)
     ckpt = cfg.checkpoint_location
-    maker = EventMaker(seed, "composed")
+    maker = EventMaker(seed)
     backlog = maker.dims(time.time()) + [
-        maker.event(time.time())[0] for _ in range(BACKLOG_EVENTS)
+        maker.event(time.time()) for _ in range(BACKLOG_EVENTS)
     ]
-    write_file(d["stage"], d["in"], "backlog.json", backlog)
+    write_file(d["stage"], d["in"], "backlog.json",
+               [json.dumps(e) for e in backlog])
 
     t_setup = time.perf_counter()
     with span("composed.setup"):
@@ -314,22 +315,22 @@ def run(spark, work: str, seed: int, seconds: float, tracer=None) -> dict:
                 q.stop()
                 q.awaitTermination(60)
 
-    errors = []
+    checks = Checks()
     probe = {}
     with span("composed.check"):
-        errors += [f"{s}: files changed by the replay" for s in before
-                   if before[s] != listing(kw[STORE_KW[s][0]])]
+        for s in before:
+            checks.expect(before[s] == listing(kw[STORE_KW[s][0]]),
+                          f"{s}: files changed by the replay")
         replica = _replica_rows(spark, cfg)
-        if replica != replica_before:
-            errors.append("replica: read-back changed by the replay")
+        checks.expect(replica == replica_before,
+                      "replica: read-back changed by the replay")
         want_replica, want_agg = duckdb_expected(d["in"])
-        if replica != want_replica:
-            errors.append(
-                f"replica != DuckDB recompute ({len(replica)} vs "
-                f"{len(want_replica)} keys)")
+        checks.expect(replica == want_replica,
+                      f"replica != DuckDB recompute ({len(replica)} vs "
+                      f"{len(want_replica)} keys)")
         agg = _agg_rows(spark, cfg)
-        if agg != want_agg:
-            errors.append(f"aggview != DuckDB recompute: {agg} vs {want_agg}")
+        checks.expect(agg == want_agg,
+                      f"aggview != DuckDB recompute: {agg} vs {want_agg}")
         # every store with a marker or epoch pointer reports the epoch
         # as replayed (the replica has none: its LWW merge is
         # idempotent, and its read-back above held).  The traced run
@@ -345,10 +346,11 @@ def run(spark, work: str, seed: int, seconds: float, tracer=None) -> dict:
                     out[s] = composed_apply_batch(
                         replay_batch, 0, ckpt, **_only(kw, s))[s]
                 probe[s] = sp["end"] - sp["start"]
-            if _replica_rows(spark, cfg) != replica_before:
-                errors.append("replica: read-back changed by a re-apply")
-        errors += [f"{s}: replay outcome {out[s]!r}" for s in STORES[1:]
-                   if out[s] != "replayed-skip"]
+            checks.expect(_replica_rows(spark, cfg) == replica_before,
+                          "replica: read-back changed by a re-apply")
+        for s in STORES[1:]:
+            checks.expect(out[s] == "replayed-skip",
+                          f"{s}: replay outcome {out[s]!r}")
 
     layers = {f"store.{s}.replay_probe_s": v for s, v in probe.items()}
     layers["composed.jobs_per_batch"] = jobs
@@ -356,21 +358,16 @@ def run(spark, work: str, seed: int, seconds: float, tracer=None) -> dict:
     layers["composed.recovery_s"] = statistics.median(recoveries)
     if tracer is not None:
         layers.update(traced_batch(spark, tracer, work, seed, d["in"],
-                                   catchup_s, jobs, errors))
+                                   catchup_s, jobs, checks))
     return {
         "setup_part_s": setup_part_s,
-        "metrics": {
-            "latency_p50_s": catchup_s,
-            "latency_tail_s": catchup_s,
-            "events_per_s": len(backlog) / catchup_s,
-        },
-        "attempted": len(STORES) + 2,
-        "failed": len(errors),
-        "check_errors": errors,
+        "metrics": {"events_per_s": len(backlog) / catchup_s},
+        "attempted": checks.run,
+        "failed": len(checks.errors),
+        "check_errors": checks.errors,
         "layers": layers,
         "info": {
             "catchup_s": catchup_s,
-            "tail_label": "max of 1",
             "backlog_events": len(backlog),
             "recoveries_s": recoveries,
         },
@@ -434,7 +431,7 @@ def _store_calls(pinned, shared, epoch: int, kw: dict) -> dict:
 
 
 def traced_batch(spark, tracer, work, seed, backlog_dir, stream_wall,
-                 stream_jobs, errors) -> dict:
+                 stream_jobs, checks) -> dict:
     """The per-layer run: the same backlog applied again, into a second
     set of fresh stores, by pinning it, calling ``reduce_batch_shared``
     and then each store's batch function one at a time, in
@@ -475,11 +472,9 @@ def traced_batch(spark, tracer, work, seed, backlog_dir, stream_wall,
     out["composed.traced_batch_s"] = wall
     out["composed.traced_jobs_per_batch"] = root["jobs"]
     out["composed.unaccounted_s"] = gap
-    if abs(stream_jobs - root["jobs"]) > STREAM_JOB_SLACK:
-        errors.append(
-            f"job census: stream {stream_jobs} vs traced {root['jobs']}, "
-            f"more than {STREAM_JOB_SLACK} apart")
-    if gap > 0.05 * wall:
-        errors.append(
-            f"traced batch: {gap:.3f}s of {wall:.3f}s outside every layer span")
+    checks.expect(abs(stream_jobs - root["jobs"]) <= STREAM_JOB_SLACK,
+                  f"job census: stream {stream_jobs} vs traced {root['jobs']}, "
+                  f"more than {STREAM_JOB_SLACK} apart")
+    checks.expect(gap <= 0.05 * wall,
+                  f"traced batch: {gap:.3f}s of {wall:.3f}s outside every layer span")
     return out
