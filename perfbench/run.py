@@ -67,8 +67,11 @@ def main() -> int:
     os.makedirs(work)
     spark = None
     try:
-        # the relay shares the host with its generator process
-        spark_cpus = max(1, nproc() - (a.workload == "relay_stream"))
+        # Spark's task slots leave one core free: for the relay's
+        # generator process, and for the composed relay's driver-side
+        # store threads (with all cores as slots its catch-up was slower
+        # and more spread: 31-38 s vs 29-33 s over four interleaved pairs)
+        spark_cpus = max(1, nproc() - 1)
         host = host_fit(work, spark_cpus)
         canary_before = canary_s()
         steal_before = cpu_times()
