@@ -17,6 +17,11 @@ region, and prints detail lines followed by one JSON result line:
 ``--trace 0`` reports the end-to-end metrics of BENCHMARK.json,
 ``--trace 1`` the per-layer metrics (zero for a layer the workload
 does not reach) and writes the span file to ``.perfbench_out/``.
+
+The command is a supervisor: it measures in a child process and, on
+every path out, stops and reaps every process the child left behind
+before it exits (Spark's JVM outlives its Python driver by a second or
+more while its shutdown hooks run).
 """
 
 from __future__ import annotations
@@ -26,11 +31,20 @@ import time
 T_PROCESS = time.perf_counter()
 
 import argparse  # noqa: E402
+import ctypes  # noqa: E402
 import importlib.util  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
+import signal  # noqa: E402
+import subprocess  # noqa: E402
 import sys  # noqa: E402
+
+# set in the measuring child: the supervisor's start, on the monotonic
+# clock perf_counter reads, so setup_s counts from the command's start
+CHILD_ENV = "PERFBENCH_T0"
+if CHILD_ENV in os.environ:
+    T_PROCESS = float(os.environ[CHILD_ENV])
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
@@ -45,9 +59,127 @@ from common import (  # noqa: E402
 )
 
 WORKLOADS = ("relay_stream", "composed_relay")
+PR_SET_CHILD_SUBREAPER = 36
+EXIT_GRACE_S = 10  # left-behind processes may end on their own this long
+KILL_AFTER_S = 5  # then SIGTERM, and this much later SIGKILL
+
+
+def _work_dir(pid: int) -> str:
+    return os.path.abspath(os.path.join(".perfbench_work", f"run-{pid}"))
+
+
+def _descendants() -> list[int]:
+    """Every live or zombie process below this one, from ``/proc``."""
+    children: dict[int, list[int]] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue  # ended while listed
+        children.setdefault(ppid, []).append(int(name))
+    out, todo = [], [os.getpid()]
+    while todo:
+        for pid in children.get(todo.pop(), ()):
+            out.append(pid)
+            todo.append(pid)
+    return out
+
+
+def _reap_zombies() -> None:
+    while True:
+        try:
+            pid, _status = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def _stop_descendants() -> list[int]:
+    """Wait for every descendant to end, signalling the stragglers;
+    returns those that outlived SIGKILL (none, unless stuck in the
+    kernel).  As child subreaper this process inherits the orphans, so
+    it reaps them all."""
+    start = time.monotonic()
+    sent = None
+    while True:
+        _reap_zombies()
+        left = _descendants()
+        if not left:
+            return []
+        waited = time.monotonic() - start
+        if waited > EXIT_GRACE_S + 2 * KILL_AFTER_S:
+            return left
+        sig = (signal.SIGKILL if waited > EXIT_GRACE_S + KILL_AFTER_S
+               else signal.SIGTERM if waited > EXIT_GRACE_S else None)
+        if sig is not None and sig != sent:
+            for pid in left:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+            sent = sig
+        time.sleep(0.05)
+
+
+def supervise() -> int:
+    """Run the measurement in a child process; whichever way it ends,
+    stop and reap every process it started, then remove its work dir."""
+    try:
+        ctypes.CDLL(None).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass  # without it, processes orphaned early escape the reaping
+
+    def on_term(signum, _frame):
+        raise SystemExit(128 + signum)
+
+    signal.signal(signal.SIGTERM, on_term)
+    child = subprocess.Popen(
+        [sys.executable, os.path.abspath(__file__), *sys.argv[1:]],
+        env={**os.environ, CHILD_ENV: repr(T_PROCESS)},
+    )
+    rc = 1
+    try:
+        rc = child.wait()
+    finally:
+        if child.poll() is None:
+            child.terminate()
+        stuck = _stop_descendants()
+        if stuck:
+            print(f"perfbench: processes {stuck} did not end", file=sys.stderr)
+            rc = rc or 1
+        shutil.rmtree(_work_dir(child.pid), ignore_errors=True)
+        try:
+            os.rmdir(".perfbench_work")
+        except OSError:
+            pass  # absent, or another run's dir is in it
+    return rc
+
+
+def _stop_spark(spark) -> None:
+    """Stop the session, then the gateway JVM: it exits at EOF on its
+    stdin once its shutdown hooks have run.  Waiting for it here keeps
+    the run dir in use until nothing writes to it."""
+    from pyspark import SparkContext
+
+    proc = getattr(SparkContext._gateway, "proc", None)
+    spark.stop()
+    if proc is None:
+        return
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=20)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
 
 
 def main() -> int:
+    if CHILD_ENV not in os.environ:
+        return supervise()
     ap = argparse.ArgumentParser(description="Run one benchmark workload.")
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
@@ -63,7 +195,7 @@ def main() -> int:
         return 2
     with open("BENCHMARK.json") as fh:
         spec = json.load(fh)
-    work = os.path.abspath(os.path.join(".perfbench_work", f"run-{os.getpid()}"))
+    work = _work_dir(os.getpid())
     os.makedirs(work)
     spark = None
     try:
@@ -135,7 +267,7 @@ def main() -> int:
         return 0 if correct else 1
     finally:
         if spark is not None:
-            spark.stop()
+            _stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
 
 

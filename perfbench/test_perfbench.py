@@ -7,12 +7,14 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from common import Checks, file_latencies, percentile, summary  # noqa: E402
 from gen import EventMaker, RelayEvents, _Ahead, run_schedule, write_file  # noqa: E402
@@ -238,3 +240,28 @@ def test_checks_count_what_ran():
     c.expect(True, "a")
     c.expect(False, "b")
     assert (c.run, c.errors) == (2, ["b"])
+
+
+def test_supervisor_stops_an_orphaned_grandchild():
+    """A process the measurement leaves behind, even one whose parent
+    has exited, is inherited and stopped before the supervisor returns.
+    Run in its own interpreter: becoming a subreaper is process-wide."""
+    script = f"""
+import ctypes, subprocess, sys, time
+sys.path.insert(0, {HERE!r})
+import run
+ctypes.CDLL(None).prctl(run.PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+run.EXIT_GRACE_S, run.KILL_AFTER_S = 0.5, 0.5
+subprocess.run([sys.executable, "-c",
+                "import subprocess; subprocess.Popen(['sleep', '60'])"],
+               check=True)
+assert run._descendants(), "the orphaned sleep was not inherited"
+t0 = time.monotonic()
+assert run._stop_descendants() == []
+assert not run._descendants()
+print(time.monotonic() - t0)
+"""
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, timeout=60)
+    assert out.returncode == 0, out.stderr
+    assert float(out.stdout) < 5
